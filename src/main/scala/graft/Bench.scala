@@ -46,23 +46,20 @@ object Bench {
       try src.mkString.split(" ")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
-  def main(args: Array[String]): Unit = {
+  /** The bench's session and scale-factor directory: `SPARK_GRAFT_CPUS`
+    * executor threads (default 32, one shuffle partition each) over
+    * `SPARK_GRAFT_SF_DIR`. `Inspect` runs in this same session. */
+  private[graft] def session(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadAtLaunch = loadAvg1m()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // managed tables (join_smb's bucketed sides) go to tmp, not ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
+    (spark, sfDir)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val loadAtLaunch = loadAvg1m()
+    val (spark, sfDir) = session()
 
     // JVM/IO warmup outside any per-query timing (shared, not per-query)
     warmupQueries.foreach { name =>
@@ -106,26 +103,14 @@ object Bench {
       val times =
         if (first.exists(_ < 0) || median(first) >= 0.5 || repeats != 3) first
         else first ++ Seq(once(), once())
-      // Release this query's persisted intermediates before the next one:
-      // several queries persist (doc_id, gram/sid) frames that nothing
-      // unpersists (the load-bearing cache barriers in contaminationOf /
-      // repetitionOf / dupChunksOf / llmNgramJaccard / minhashDupPairs),
-      // so without this every such query leaves MEMORY_AND_DISK entries
-      // in the CacheManager for the rest of the session. Clearing BETWEEN
-      // queries (not between repeats) bounds the accumulation to one
-      // query's caches while keeping per-repeat semantics identical to
-      // prior rounds (repeats 2+ reuse the canonical-plan cache entry, so
-      // medians stay round-over-round comparable).
-      spark.catalog.clearCache()
-      // clearCache() empties only the Dataset CacheManager; the iterative
-      // graph/cc queries' localCheckpoint() blocks are RDD-level persists
-      // it never touches, and they accumulated in the block manager for
-      // the rest of the session (r20: with the betweenness/harmonic
-      // additions the leak grew measurable — the late-alphabet v3 capstone
-      // read 11.3 s in-suite vs 3.9 standalone). Nothing legitimately
-      // persists ACROSS queries, so drop every surviving RDD block too.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // Release this query's persisted intermediates before the next one
+      // (several queries leave load-bearing cache barriers and
+      // localCheckpoint blocks behind). Clearing BETWEEN queries (not
+      // between repeats) bounds the accumulation to one query's caches
+      // while keeping per-repeat semantics identical to prior rounds
+      // (repeats 2+ reuse the canonical-plan cache entry, so medians stay
+      // round-over-round comparable).
+      Pipeline.releaseCaches(spark)
       name -> (if (times.exists(_ < 0)) Seq.empty[Double] else times)
     }
     // Full per-query detail for humans — prefix-tagged so the driver's
@@ -215,7 +200,7 @@ object Bench {
     * registered queries whose max/min repeat ratio exceeded 2.5× — the
     * empirical weather signature (r11–r16: spreads of 2–3× on identical
     * code were always box interference, tight spreads around a high
-    * median were always real) — capped at 6 names so a stormy run can't
+    * median were always real) — capped at 3 names so a stormy run can't
     * push the line past the driver's 2000-char tail capture. A future
     * `join_salted`-style spike now carries its own adjudication: in
     * "wide" + elevated load ⇒ weather; tight spread at quiet load ⇒

@@ -57,8 +57,8 @@ object Tables {
     * how the fixture generation encoded it. Observed encodings across
     * driver rounds:
     *   - parquet TIMESTAMP(NANOS): Spark reads it as `LongType` under
-    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set in Verify/Bench
-    *     sessions) → ns DIV 1000 → `timestamp_micros`.
+    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    *     [[GraftSession]]) → ns DIV 1000 → `timestamp_micros`.
     *   - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads it
     *     as `TIMESTAMP_NTZ` → cast to TIMESTAMP (an identity re-tag under
     *     the pinned UTC session timezone, matching DuckDB's naive reading).

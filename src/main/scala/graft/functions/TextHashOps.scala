@@ -150,8 +150,9 @@ object TextHashOps {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Minimal open-addressing long set for the distinct-gram path (values
-    * are gram ids in [0, P), so -1L is a free empty sentinel). */
+  /** Minimal open-addressing long set for the distinct-gram path: -1L
+    * marks an empty slot, and a -1 gram (reachable from negative word
+    * hashes — `s % P` keeps the sign) is tracked by its own flag. */
   private def distinctLongs(in: Array[Long], m: Int): Array[Long] = {
     var cap = 8
     while (cap < m * 2) cap <<= 1
@@ -159,20 +160,24 @@ object TextHashOps {
     java.util.Arrays.fill(table, -1L)
     val mask = cap - 1
     val out = new Array[Long](m)
+    var seenMinusOne = false
     var k = 0
     var i = 0
     while (i < m) {
       val v = in(i)
+      var seen = v == -1L && seenMinusOne
       var slot = (java.lang.Long.hashCode(v) & Int.MaxValue) & mask
-      var seen = false
-      var probing = true
+      var probing = v != -1L
       while (probing) {
         val t = table(slot)
         if (t == -1L) probing = false
         else if (t == v) { seen = true; probing = false }
         else slot = (slot + 1) & mask
       }
-      if (!seen) { table(slot) = v; out(k) = v; k += 1 }
+      if (!seen) {
+        if (v == -1L) seenMinusOne = true else table(slot) = v
+        out(k) = v; k += 1
+      }
       i += 1
     }
     if (k == m) out else java.util.Arrays.copyOf(out, k)

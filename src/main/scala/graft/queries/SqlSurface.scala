@@ -1140,8 +1140,9 @@ object SqlSurface {
   /** Queries whose surface text is [[duckToSpark]] applied to the oracle
     * string — mechanically translated, gate-verified (every name here is
     * pinned to exact builder rows by `SqlSurfaceSpec`; candidates were
-    * harvested by the `SqlProbe` sweep, and a name whose translation
-    * diverges from its builder by even one row never enters this list). */
+    * harvested by the `Inspect sql` portability sweep, and a name whose
+    * translation diverges from its builder by even one row never enters
+    * this list). */
   /** Surface entries added in the CURRENT round. `SqlSurfaceSpec`'s
     * per-commit sampled round-trip ALWAYS includes these on top of the
     * stable md5 quarter — a brand-new entry must never depend on the

@@ -54,7 +54,7 @@ class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert((parsed \ "metric") == org.json4s.JString("total"))
     // Worst healthy case: every headline query carries a 3-element
     // spread AND every registered query trips the 2.5x weather flag
-    // (wide list hits its 6-name cap + overflow marker) AND both load
+    // (wide list hits its 3-name cap + overflow marker) AND both load
     // readings are present — the longest line the contract can emit.
     // Must clear the driver's 2000-char tail capture with sbt's
     // "[success]" epilogue to spare.
@@ -70,23 +70,12 @@ class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // 12 executor threads so the fan-out suites (QueriesSpec sweep,
-      // SqlSurfaceSpec round-trips, DeterminismSpec phases) overlap
-      // whole 4-partition jobs instead of serializing on 4 threads;
-      // shuffle.partitions stays 4 so per-query plan shapes and the
-      // partition-count determinism guards are unchanged.
-      .master("local[12]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    // 12 executor threads so the fan-out suites (QueriesSpec sweep,
+    // SqlSurfaceSpec round-trips, DeterminismSpec phases) overlap
+    // whole 4-partition jobs instead of serializing on 4 threads;
+    // shuffle.partitions stays 4 so per-query plan shapes and the
+    // partition-count determinism guards are unchanged.
+    val s = GraftSession(threads = 12, partitions = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

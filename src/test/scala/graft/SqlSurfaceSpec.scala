@@ -97,17 +97,9 @@ class SqlSurfaceSpec extends SparkSpec {
       val futures = names.map { name =>
         Future {
           val t0 = System.nanoTime()
-          val viaSql = spark.sql(SparkEntry.sqlQueries(name))
-            .collect().toSeq.map(_.toString)
-          val viaApi = SparkEntry.queries(name)(spark, sfDir)
-            .collect().toSeq.map(_.toString)
+          val diff = Inspect.compare(spark, sfDir, name, SparkEntry.sqlQueries(name))
           timings.add(name -> (System.nanoTime() - t0) / 1e9)
-          if (viaSql == viaApi) None
-          else Some(s"$name (${viaSql.size} vs ${viaApi.size} rows; " +
-            s"first diff: ${viaSql.zipAll(viaApi, "<none>", "<none>")
-              .find(p => p._1 != p._2)})")
-        }.recover { case e: Throwable =>
-          Some(s"$name threw: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(e.getClass.getName).take(160)}")
+          diff.map(d => s"$name: $d")
         }
       }
       val failures =

@@ -94,6 +94,16 @@ class TextHashExpressionsSpec extends SparkSpec {
     assert(r.getSeq[Long](0).isEmpty)
   }
 
+  test("hash_grams distinct keeps exactly one -1 gram") {
+    // grams keep the sign of negative word hashes (s % P), so user arrays
+    // reach a -1 gram — here twice, at i = 0 and i = 4
+    val hs = spark.createDataFrame(Seq(Tuple1(Seq(0L, 0L, 0L, -1L, 0L, 0L, 0L, -1L))))
+      .toDF("hs")
+    assertColsEqual(hs,
+      call_function("hash_grams", col("hs"), lit(4), lit(true)),
+      array_distinct(call_function("hash_grams", col("hs"), lit(4), lit(false))))
+  }
+
   test("minhash_sig == the 12 array_min(transform(sh, (a*sid+b) % P)) columns") {
     val sh = corpus
       .select(call_function("word_hashes_text", col("text")).as("hs"))
@@ -174,7 +184,11 @@ class TextHashExpressionsSpec extends SparkSpec {
   }
 
   test("char_len_sum == aggregate(transform(ws, length), 0, +); count_alpha_words == size(filter(rlike))") {
-    val base = corpus.select(split(col("text"), " ").as("ws"))
+    // plus a NULL text: both sides are NULL (size of a NULL array is NULL
+    // under ANSI mode)
+    val base = corpus
+      .unionByName(spark.sql("SELECT 100013L AS doc_id, CAST(NULL AS STRING) AS text"))
+      .select(split(col("text"), " ").as("ws"))
     assertColsEqual(base,
       call_function("char_len_sum", col("ws")),
       aggregate(transform(col("ws"), w => length(w)), lit(0), _ + _))
